@@ -139,9 +139,9 @@ object BenchScale {
           .getUsableSpace >= (4L << 30) catch { case _: Throwable => false }))
       sys.props("graft.scratch") = "/dev/shm/graft_scratch"
 
-    // ONE FRESH SparkContext PER KERNEL. Round-6 audits (AuditR6/R6b)
-    // showed the long-lived probe JVM reads the heavy kernels ~2× above
-    // their isolated matched-conditions cost (64× neardup: 52–55 s
+    // ONE FRESH SparkContext PER KERNEL. The round-6 audits (SURVEY.md
+    // §9) showed the long-lived probe JVM reads the heavy kernels ~2×
+    // above their isolated matched-conditions cost (64× neardup: 52–55 s
     // in-probe vs 21–31 s isolated) while cheap kernels are unaffected;
     // cache()-vs-count, inflation-plan analysis, and single-prior-run
     // session poisoning were each tested and REJECTED as causes, so the
@@ -149,20 +149,11 @@ object BenchScale {
     // multi-kernel session. Recycling the context per kernel (a) drops
     // the accumulated shuffle files and block-manager state with it and
     // (b) makes the artifact reproduce the isolated numbers the repo's
-    // A/B protocol (AuditR5Geom-style) produces — which is the whole
+    // matched-conditions A/B protocol (SURVEY.md §9) produces — the whole
     // point of an artifact of record.
     def withSession[T](body: (SparkSession, DataFrame, DataFrame) => T): T = {
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.local(cores = cpus, shufflePartitions = cpus,
+        appName = "graft-benchscale")
       val docs0 = io.Tables(spark, sfDir, "documents")
       val emb0 = io.Tables(spark, sfDir, "embeddings")
       docs0.count(); emb0.count() // untimed cold-start warmup
@@ -501,9 +492,9 @@ object BenchScale {
           .agg(count(lit(1)).as("n"))))
 
     // ONE FRESH SparkContext PER (KERNEL, FACTOR) — the round-8
-    // refinement of the per-kernel recycling above. AuditR8 showed the
-    // round-6 decay mechanism also operates ACROSS FACTORS within one
-    // kernel's session: the top factor runs last and read ~2× its
+    // refinement of the per-kernel recycling above. The round-8 audit
+    // (SURVEY.md §9) showed the round-6 decay mechanism also operates
+    // ACROSS FACTORS within one kernel's session: the top factor runs last and read ~2× its
     // isolated matched-conditions cost (jaccard 64×: 44.9 s in the
     // r7 artifact vs 22.8 s fresh-session; winnow 64×: 25.4 vs
     // 11.7 s) — the entire "last-octave superlinearity" the r7 table
@@ -524,8 +515,8 @@ object BenchScale {
     // synthesizes the f× corpus as an f-leg union, so at the top
     // factors the timed number carries f× plan legs' worth of
     // planning/codegen alongside the data path — an overhead a REAL
-    // f× corpus (more files, same plan) never pays. AuditR11's
-    // dupngrams probe pinned it: at 128× the gram relation is
+    // f× corpus (more files, same plan) never pays. The round-11
+    // dupngrams probe (SURVEY.md §9) pinned it: at 128× the gram relation is
     // duplicate-free (instances == distinct (doc, gram), max group 4)
     // and the kernel runs 32.4 s in-session vs 143.9 s through the
     // 128-leg union harness. With SPARK_GRAFT_SCALE_MATERIALIZE=1 the

@@ -672,17 +672,14 @@ object Dedup {
     // shuffled). Labels are identical BY CONSTRUCTION: both compute
     // min(component id) per node over the same edge set (min-label
     // fixpoint ≡ union-find + per-root min), so this is a physical
-    // rewrite, not a semantic one. Guarded: only int64 ids (every pair
-    // graph in the engine) and only below an edge bound (default 4M ≈
-    // 64 MB of ids — driver-trivial; env-overridable, 0 disables), with
-    // the distributed loop as the unconditional fallback — a 100 TB
-    // pair graph takes the loop exactly as before.
-    val ccLocalMax = sys.props.get("graft.cc.local.max")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_LOCAL_MAX"))
-      .map(_.toLong).getOrElse(4000000L)
-    val longIds = Seq("a", "b").forall(c =>
-      p0.schema(c).dataType == org.apache.spark.sql.types.LongType)
-    if (nEdges <= ccLocalMax && longIds) {
+    // rewrite, not a semantic one. Guarded by `Bounded` (integral ids,
+    // edges within the driver budget; the count above is the gate, so
+    // the collect is one plain job — not toLocalIterator, which
+    // schedules one job PER PARTITION and would reintroduce the very
+    // job chain this path removes), with the distributed loop as the
+    // unconditional fallback — a 100 TB pair graph takes the loop
+    // exactly as before.
+    for (rows <- graft.util.Bounded.collect(p0, counted = nEdges)) {
       val parent = new java.util.HashMap[Long, Long](16 * 1024)
       def find(x0: Long): Long = {
         var x = x0
@@ -695,10 +692,6 @@ object Dedup {
         }
         x
       }
-      // one collect job (bounded by ccLocalMax edges), not
-      // toLocalIterator — which schedules one job PER PARTITION and
-      // would reintroduce the very job chain this path removes
-      val rows = p0.collect()
       var ri = 0
       while (ri < rows.length) {
         val r = rows(ri); ri += 1
@@ -719,13 +712,10 @@ object Dedup {
         out(i) = org.apache.spark.sql.Row(id, find(id))
         i += 1
       }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("cluster_id",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      return pairs.sparkSession.createDataFrame(
-        java.util.Arrays.asList(out: _*), schema)
+      // labels in the loop's id type: its symmetrized union widens a/b
+      val idType = p0.select("a").union(p0.select("b")).schema.head.dataType
+      return graft.util.Bounded.leaf(pairs.sparkSession, out,
+        Seq("id" -> idType, "cluster_id" -> idType))
     }
     // the loop's per-round join+agg shuffles run under a shuffle budget
     // proportional to the (exact, already-materialized-by-the-count)
@@ -748,9 +738,7 @@ object Dedup {
       .localCheckpoint(true)
     var changed = 1L
     var i = 0
-    val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
     while (changed > 0 && i < maxIters) {
-      val t0 = System.nanoTime()
       val prop = edges.join(labels, col("dst") === col("id"))
         .groupBy(col("src").as("pid")).agg(min(col("lbl")).as("nlbl"))
       // lazy checkpoint: the count below runs the round's single job,
@@ -765,8 +753,6 @@ object Dedup {
       changed = next.where(col("__chg")).count()
       labels = next.select("id", "lbl")
       i += 1
-      if (verbose) System.err.println(
-        f"[cc] round $i%2d  changed=$changed%-8d ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     }
     require(changed == 0,
       s"connectedComponents did not converge in $maxIters rounds — raise maxIters")

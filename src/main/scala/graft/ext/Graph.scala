@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Bounded
+
 /** Iterative graph analytics over relation-shaped edge lists. The
   * reference's framework runs exactly this workload class as chained
   * MapReduce rounds (`w6/docs/design.md` motivates the framework with
@@ -16,42 +18,24 @@ import org.apache.spark.sql.functions._
   * the similarity graph surfaces "hub" documents (highly reachable =
   * semantically central = likely boilerplate) exactly the way
   * repetition scores surface templated text.
+  *
+  * r14 driver-local fast paths (the `connectedComponents` /
+  * driver-local-trainer precedent, guide §1.2): a graph whose ids-only
+  * edge + node relations fit the `Bounded` budget is folded with an
+  * exact local loop instead of the per-round join+aggregate jobs — the
+  * fixed-round fixpoints here cost 2–4 scheduler round-trips PER ROUND
+  * while moving < 5 MB at fixture scale (ProfileQ: the graph family was
+  * 2.5–4 s each, nearly all scheduling latency). Arithmetic is
+  * replicated EXACTLY (int64 floor division on non-negative values,
+  * argmax ties, set semantics — each documented at its loop) and the
+  * DuckDB oracle replay pins it per query. The relations a loop needs
+  * share the budget equally; past it (or with `graft.local.max` ≤ 0)
+  * every algorithm takes the distributed loop exactly as before — a
+  * 100 TB graph never touches the driver.
   */
 object Graph {
 
-  /** r14 fast-path bound (the `connectedComponents` /
-    * driver-local-trainer precedent, guide §1.2): a graph whose
-    * ids-only edge + node relations fit comfortably on the driver is
-    * folded with an exact local loop instead of the per-round
-    * join+aggregate jobs — the fixed-round fixpoints here cost 2–4
-    * scheduler round-trips PER ROUND while moving < 5 MB at fixture
-    * scale (ProfileQ: the graph family was 2.5–4 s each, nearly all
-    * scheduling latency). Arithmetic is replicated EXACTLY (int64
-    * floor division on non-negative values, argmax ties, set
-    * semantics — each documented at its loop) and the DuckDB oracle
-    * replay pins it per query. Above the bound (default 4M rows
-    * combined; env-overridable, 0 disables) every algorithm takes the
-    * distributed loop exactly as before — a 100 TB graph never
-    * touches the driver. */
-  private def graphLocalMax: Long = sys.props.get("graft.graph.local.max")
-    .orElse(sys.env.get("SPARK_GRAFT_GRAPH_LOCAL_MAX"))
-    .map(_.toLong).getOrElse(4000000L)
-
-  private def allLong(df: DataFrame, cols: String*): Boolean =
-    cols.forall(c =>
-      df.schema(c).dataType == org.apache.spark.sql.types.LongType)
-
-  /** LocalRelation of all-int64 rows — broadcasts into every consumer
-    * with no job, no cache entry (the trainer-result idiom). */
-  private def localRel(
-      spark: org.apache.spark.sql.SparkSession,
-      rows: Array[org.apache.spark.sql.Row],
-      names: Seq[String]): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(names.map(n =>
-      org.apache.spark.sql.types.StructField(n,
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
+  private val longT = org.apache.spark.sql.types.LongType
 
   /** Shipped constants, shared with the oracle generator: rank mass is
     * scaled to 10⁹ integer units, damping 0.85 as the classic x100
@@ -99,16 +83,18 @@ object Graph {
     // teleport/seed terms are constant-folded from the same count.
     val nn = nodes.count()
     val teleport = if (nn == 0) 0L else ((100L - dampX100) * scale) / (100L * nn)
-    // r14 driver-local fast path (see graphLocalMax): the loop below
+    // r14 driver-local fast path (see the object doc): the loop below
     // replicates the distributed rounds exactly — degrees count edge
     // MULTIPLICITY (no distinct here), a src outside the node set
     // contributes nothing (the rank join is inner), a dst outside it
     // receives nothing (ranks come from the node relation), and
     // `r div d` on non-negative int64 is Java `/`.
-    if (nn + edges.count() <= graphLocalMax &&
-        allLong(edges, "src", "dst") && allLong(nodes, "id")) {
-      val eArr = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val nArr = nodes.collect().map(_.getLong(0))
+    for {
+      eRows <- Bounded.collect(edges, share = 2)
+      nRows <- Bounded.collect(nodes, share = 2, counted = nn)
+    } {
+      val eArr = eRows.map(r => (r.getLong(0), r.getLong(1)))
+      val nArr = nRows.map(_.getLong(0))
       val degM = scala.collection.mutable.LongMap.empty[Long]
       eArr.foreach { case (s, _) => degM(s) = degM.getOrElse(s, 0L) + 1L }
       var r = scala.collection.mutable.LongMap.empty[Long]
@@ -125,9 +111,9 @@ object Graph {
           nr(id) = teleport + (dampX100 * contrib.getOrElse(id, 0L)) / 100L)
         r = nr
       }
-      return localRel(edges.sparkSession,
+      return Bounded.leaf(edges.sparkSession,
         nArr.map(id => org.apache.spark.sql.Row(id, r(id))),
-        Seq(idCol, "pr"))
+        Seq(idCol -> nodes.schema("id").dataType, "pr" -> longT))
     }
     // out-degree joined onto every edge once — the per-iteration join
     // then carries (src, dst, d) and never recomputes degrees
@@ -215,10 +201,12 @@ object Graph {
     // r14 driver-local fast path — the pageRank loop with the
     // seed-gated teleport (isSeed ∈ {0,1} rides the collected node
     // rows; everything else replicates identically)
-    if (nodes.count() + edges.count() <= graphLocalMax &&
-        allLong(edges, "src", "dst") && allLong(nodes, "id")) {
-      val eArr = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val nArr = nodes.collect().map(r => (r.getLong(0), r.getLong(1)))
+    for {
+      eRows <- Bounded.collect(edges, share = 2)
+      nRows <- Bounded.collect(nodes, share = 2)
+    } {
+      val eArr = eRows.map(r => (r.getLong(0), r.getLong(1)))
+      val nArr = nRows.map(r => (r.getLong(0), r.getLong(1)))
       val degM = scala.collection.mutable.LongMap.empty[Long]
       eArr.foreach { case (s, _) => degM(s) = degM.getOrElse(s, 0L) + 1L }
       var r = scala.collection.mutable.LongMap.empty[Long]
@@ -236,9 +224,9 @@ object Graph {
         }
         r = nr
       }
-      return localRel(edges.sparkSession,
+      return Bounded.leaf(edges.sparkSession,
         nArr.map { case (id, _) => org.apache.spark.sql.Row(id, r(id)) },
-        Seq(idCol, "trust"))
+        Seq(idCol -> nodes.schema("id").dataType, "trust" -> longT))
     }
     val ed = scope.cache(edges
       .join(edges.groupBy("src").agg(count(lit(1)).as("d")), "src"))
@@ -432,10 +420,12 @@ object Graph {
     // the per-round winner is max count with ties to the SMALLEST
     // label (the max(struct(c, -lab)) argmax), and a node with no
     // in-votes keeps its label (the left-join coalesce).
-    if (nodes.count() + und.count() <= graphLocalMax &&
-        allLong(und, "src", "dst") && allLong(nodes, "id")) {
-      val eArr = und.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val nArr = nodes.collect().map(_.getLong(0))
+    for {
+      eRows <- Bounded.collect(und, share = 2)
+      nRows <- Bounded.collect(nodes, share = 2)
+    } {
+      val eArr = eRows.map(r => (r.getLong(0), r.getLong(1)))
+      val nArr = nRows.map(_.getLong(0))
       var lab = scala.collection.mutable.LongMap.empty[Long]
       nArr.foreach(id => lab(id) = id)
       for (_ <- 1 to iters) {
@@ -459,9 +449,9 @@ object Graph {
           nl(id) = best.get(id).map(_._2).getOrElse(lab(id)))
         lab = nl
       }
-      return localRel(und.sparkSession,
+      return Bounded.leaf(und.sparkSession,
         nArr.map(id => org.apache.spark.sql.Row(id, lab(id))),
-        Seq(idCol, "community"))
+        Seq(idCol -> nodes.schema("id").dataType, "community" -> longT))
     }
     var labs = nodes0.select(col(idCol).as("id"), col(idCol).cast("long").as("lab"))
       .localCheckpoint(false)
@@ -692,8 +682,8 @@ object Graph {
     // round, survivors are the endpoints whose residual degree ≥ k,
     // and an edge survives only if BOTH endpoints do. Output is the
     // survivors' residual degrees, exactly the distributed aggregate.
-    if (allLong(und, "src", "dst") && und.count() <= graphLocalMax) {
-      var eArr = und.collect().map(r => (r.getLong(0), r.getLong(1)))
+    for (eRows <- Bounded.collect(und)) {
+      var eArr = eRows.map(r => (r.getLong(0), r.getLong(1)))
       for (_ <- 1 to rounds) {
         val degM = scala.collection.mutable.LongMap.empty[Long]
         eArr.foreach { case (s, _) => degM(s) = degM.getOrElse(s, 0L) + 1L }
@@ -702,9 +692,9 @@ object Graph {
       }
       val degM = scala.collection.mutable.LongMap.empty[Long]
       eArr.foreach { case (s, _) => degM(s) = degM.getOrElse(s, 0L) + 1L }
-      return localRel(und.sparkSession,
+      return Bounded.leaf(und.sparkSession,
         degM.toArray.map { case (id, d) => org.apache.spark.sql.Row(id, d) },
-        Seq("id", "deg"))
+        Seq("id" -> und.schema("src").dataType, "deg" -> longT))
     }
     for (_ <- 1 to rounds) {
       val keep = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
@@ -788,17 +778,19 @@ object Graph {
     // distributed form), `rounds` synchronous expansions over the
     // deduped symmetrized edges, unreached nodes -1 via the final
     // left join against the node set.
-    if (nodes.count() + und.count() + seedsD.count() <= graphLocalMax &&
-        allLong(und, "src", "dst") && allLong(nodes, "id") &&
-        allLong(seedsD, "id")) {
+    for {
+      eRows <- Bounded.collect(und, share = 3)
+      nRows <- Bounded.collect(nodes, share = 3)
+      sRows <- Bounded.collect(seedsD, share = 3)
+    } {
       val adj = scala.collection.mutable.LongMap
         .empty[scala.collection.mutable.ArrayBuffer[Long]]
-      und.collect().foreach { r =>
+      eRows.foreach { r =>
         adj.getOrElseUpdate(r.getLong(0),
           scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
       }
       val depth = scala.collection.mutable.LongMap.empty[Long]
-      var frontier = seedsD.collect().map(_.getLong(0)).toSeq
+      var frontier = sRows.map(_.getLong(0)).toSeq
       frontier.foreach(id => depth(id) = 0L)
       for (d <- 1 to rounds) {
         val nxt = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -807,10 +799,10 @@ object Graph {
         }))
         frontier = nxt.toSeq
       }
-      return localRel(und.sparkSession,
-        nodes.collect().map(_.getLong(0)).map(id =>
+      return Bounded.leaf(und.sparkSession,
+        nRows.map(_.getLong(0)).map(id =>
           org.apache.spark.sql.Row(id, depth.getOrElse(id, -1L))),
-        Seq(idCol, "depth"))
+        Seq(idCol -> nodes.schema("id").dataType, "depth" -> longT))
     }
     var visited = seedsD
       .withColumn("depth", lit(0L))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Bounded
+
 /** Embedding similarity search (SURVEY.md §2.5).
   *
   * Scores use quantized integer dot products: each float coordinate is
@@ -30,14 +32,14 @@ object Similarity {
   val defaultTrainSample = 32768
 
   /** IVF-PQ serving defaults — the measured operating point, not the
-    * cheapest one. `AuditRecall` (SURVEY §9) on the isotropic sf0.1
-    * embeddings (coarse quantization's worst case, so these are floor
-    * numbers): nprobe=4/refine=40 → recall@10 0.26, with the ADC
-    * shortlist — not the coarse probe — as the binding cap (nprobe 16
-    * alone → 0.34; refine 40→160 at nprobe 16 → 0.57). Defaults sit
-    * at that 0.57 point; candidate cost is linear in nprobe and the
-    * exact re-rank linear in refine, so callers trading recall for
-    * cost turn the knobs DOWN knowingly rather than shipping a 0.26
+    * cheapest one. The recall@10 sweep in SURVEY.md §9 on the
+    * isotropic sf0.1 embeddings (coarse quantization's worst case, so
+    * these are floor numbers): nprobe=4/refine=40 → recall@10 0.26,
+    * with the ADC shortlist — not the coarse probe — as the binding cap
+    * (nprobe 16 alone → 0.34; refine 40→160 at nprobe 16 → 0.57).
+    * Defaults sit at that 0.57 point; candidate cost is linear in
+    * nprobe and the exact re-rank linear in refine, so callers trading
+    * recall for cost turn the knobs DOWN knowingly rather than shipping a 0.26
     * default unknowingly. Shared with the DuckDB oracle generator
     * (ExtQueries interpolates exactly these constants) like
     * `defaultTrainRounds`, so engine and oracle can never desync. */
@@ -452,7 +454,7 @@ object Similarity {
       trainRounds: Int,
       trainSample: Int,
       scope: graft.util.CacheScope): DataFrame = {
-    requireIntegralId(corpus, idCol, "ivfCentroids")
+    Bounded.requireIntegralId(corpus, idCol, "ivfCentroids")
     // Round-13 optimization (guide §1.2 step 1 — remove passes): the
     // Lloyd loop runs on the DRIVER over the bounded training sample.
     // The sample is <= max(trainSample, numCentroids) rows BY CONTRACT
@@ -559,25 +561,6 @@ object Similarity {
     // no cache entry, no lineage to truncate
     spark.createDataFrame(out, schema)
       .select(col("cent_id").cast(idType).as("cent_id"), col("cv"), col("nrm"))
-  }
-
-  /** The driver-local trainers order and collect the sample through
-    * `cast(idCol, long)` — exact for every integral id, but a
-    * non-numeric string id would silently null out where the r12
-    * distributed formulation handled any orderable type (round-13
-    * verdict, "latent type narrowing"). Fail loudly at entry instead:
-    * every caller in the engine passes an int64 id, and a deployment
-    * with string ids must hash them to int64 first (as the fixtures
-    * do), not lose them to a silent null sort key. */
-  private def requireIntegralId(df: DataFrame, idCol: String, who: String): Unit = {
-    val t = df.schema(idCol).dataType
-    require(Seq(
-      org.apache.spark.sql.types.LongType,
-      org.apache.spark.sql.types.IntegerType,
-      org.apache.spark.sql.types.ShortType,
-      org.apache.spark.sql.types.ByteType).contains(t),
-      s"$who: id column '$idCol' must be an integral type (the driver-local " +
-        s"trainer orders the sample by cast($idCol as long)); got $t")
   }
 
   /** Exact int64 dot — the driver twin of the codegen'd `QuantizedDot`
@@ -743,14 +726,8 @@ object Similarity {
     // shortlist + one of its vectors; above it (or on any input outside
     // the exact-replica assumptions) the distributed loop below runs
     // unchanged.
-    val longT = org.apache.spark.sql.types.LongType
-    if (mmrLocalMax > 0 &&
-        cand.schema.forall(_.dataType == longT) &&
-        vectors.schema(idCol).dataType == longT &&
-        cand.count() <= mmrLocalMax) {
-      val local = localMmr(cand, vectors, idCol, vecCol, k, lambdaPermille)
-      if (local.isDefined) { scope.close(); return local.get }
-    }
+    val local = localMmr(cand, vectors, idCol, vecCol, k, lambdaPermille)
+    if (local.isDefined) { scope.close(); return local.get }
     val withVec = shortlist.select(col("probe_id"), col("vec_id"))
       .join(vectors.select(col(idCol).as("vec_id"), col(vecCol).as("__v")), "vec_id")
     val pa = withVec.select(col("probe_id"), col("vec_id").as("i"), col("__v").as("__va"))
@@ -790,12 +767,6 @@ object Similarity {
     selected
   }
 
-  /** Bounded-shortlist ceiling for the driver-local MMR fast path
-    * (`SPARK_GRAFT_MMR_LOCAL_MAX` / `graft.mmr.local.max`; 0 disables). */
-  private def mmrLocalMax: Long = sys.props.get("graft.mmr.local.max")
-    .orElse(sys.env.get("SPARK_GRAFT_MMR_LOCAL_MAX"))
-    .map(_.toLong).getOrElse(32768L)
-
   /** Driver-local exact replica of `mmrRerank`'s greedy rounds over a
     * bounded shortlist: collects the (probe, vec, qdot) candidates and
     * the shortlist ids' PRE-QUANTIZED vectors (the engine expression
@@ -806,8 +777,9 @@ object Similarity {
     * BOTH sides have a vector — the inner `sims` join), scores
     * λ·qdot − (1000−λ)·pen, argmax with smaller-id ties; candidates
     * without a computable penalty drop from that round exactly like
-    * the distributed inner pen join. Returns None (caller falls back)
-    * on null ids/qdots, null/ragged/duplicate vector rows. */
+    * the distributed inner pen join. The shortlist and its vectors
+    * share the `Bounded` budget; returns None (caller falls back) past
+    * it or on null ids/qdots, null/ragged/duplicate vector rows. */
   private def localMmr(
       cand: DataFrame,
       vectors: DataFrame,
@@ -816,31 +788,16 @@ object Similarity {
       k: Int,
       lambdaPermille: Int): Option[DataFrame] = {
     val spark = cand.sparkSession
-    val candRows = cand.collect()
-    if (candRows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
-      return None
+    // 32,768: the largest shortlist the single-threaded greedy loop was measured at
+    val candRows = Bounded.collect(cand, share = 2, cap = 32768L).getOrElse(return None)
     val ids = candRows.map(_.getLong(1)).distinct
-    val idRel = spark.createDataFrame(
-      java.util.Arrays.asList(ids.map(org.apache.spark.sql.Row(_)): _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__mid",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    val qvE = transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long"))
-    val vecRows = vectors
+    val idRel = Bounded.leaf(spark, ids.map(org.apache.spark.sql.Row(_)), Seq("__mid" -> longT))
+    val vecRows = Bounded.collect(vectors
       .join(broadcast(idRel), col(idCol) === col("__mid"))
-      .select(col(idCol).as("vid"), qvE.as("qv"))
-      .collect()
-    if (vecRows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+      .select(col(idCol).as("vid"), qvT(col(vecCol)).as("qv")),
+      share = 2, unique = Seq("vid")).getOrElse(return None)
     val vecMap = scala.collection.mutable.LongMap.empty[Array[Long]]
-    var dim = -1
-    for (r <- vecRows) {
-      val vid = r.getLong(0)
-      val qv = r.getSeq[Long](1).toArray
-      if (dim < 0) dim = qv.length
-      if (qv.length != dim) return None
-      if (vecMap.contains(vid)) return None // duplicate vector row
-      vecMap(vid) = qv
-    }
+    for (r <- vecRows) vecMap(r.getLong(0)) = r.getSeq[Long](1).toArray
     // candidates grouped per probe, driver-side (probe order = collect
     // order for a deterministic output row order)
     val perProbe = new java.util.LinkedHashMap[Long, scala.collection.mutable.ArrayBuffer[(Long, Long)]]
@@ -897,13 +854,8 @@ object Similarity {
         rn += 1
       }
     }
-    val longT = org.apache.spark.sql.types.LongType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("probe_id", longT, nullable = false),
-      org.apache.spark.sql.types.StructField("vec_id", longT, nullable = false),
-      org.apache.spark.sql.types.StructField("qdot", longT, nullable = false),
-      org.apache.spark.sql.types.StructField("rn", longT, nullable = false)))
-    Some(spark.createDataFrame(out, schema))
+    Some(Bounded.leaf(spark, out,
+      cand.schema.map(f => f.name -> f.dataType) :+ ("rn" -> longT)))
   }
 
   /** Content-based ingest drift monitor: each group's (source's /
@@ -1156,14 +1108,12 @@ object Similarity {
     * the distributed path) or supplied a matching `localEdgeFilter`. */
   private val noEdgeFilter: Column = lit(true)
 
-  /** Bounded-corpus ceiling for the driver-local kNN-graph fast path
-    * (`SPARK_GRAFT_KNN_LOCAL_MAX` / `graft.knn.local.max`; 0 disables).
-    * The effective bound is min(this, trainSample): below it the
-    * hash-ordered collect brings back no more rows than the trainer's
-    * own bounded sample collect already does by contract. */
-  private def knnLocalMax: Long = sys.props.get("graft.knn.local.max")
-    .orElse(sys.env.get("SPARK_GRAFT_KNN_LOCAL_MAX"))
-    .map(_.toLong).getOrElse(32768L)
+  private val longT = org.apache.spark.sql.types.LongType
+
+  /** Columns of a per-probe top-k result — (probe_id, id, qdot, rn) —
+    * ids in the corpus id type: the driver-local replicas' leaf schema. */
+  private def topKCols(idCol: String, idType: org.apache.spark.sql.types.DataType) =
+    Seq("probe_id" -> idType, idCol -> idType, "qdot" -> longT, "rn" -> longT)
 
   def knnGraphIvf(
       corpus: DataFrame,
@@ -1189,30 +1139,17 @@ object Similarity {
       // contract the ENTIRE derivation (train + assign + probe +
       // rescore + topk) runs driver-local over one hash-ordered collect
       // — at sf0.1 this replaces ~10 scheduler-bound jobs per graph
-      // query with 2 (count + collect). A corpus above the bound takes
-      // exactly the distributed path below, unchanged.
+      // query with 2 (count + collect). A corpus past the trainer's
+      // sample or the `Bounded` budget takes exactly the distributed
+      // path below, unchanged.
       val n = corpus.count()
       val kCents =
         if (numCentroids > 0) numCentroids else graphCentroidBudget(n)
-      val localOk = knnLocalMax > 0 &&
-        n <= math.min(knnLocalMax, trainSample.toLong) &&
-        Seq[org.apache.spark.sql.types.DataType](
-          org.apache.spark.sql.types.LongType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.ShortType,
-          org.apache.spark.sql.types.ByteType)
-          .contains(corpus.schema(idCol).dataType) &&
-        ((edgeFilter eq noEdgeFilter) || localEdgeFilter.isDefined)
-      if (localOk) {
+      if ((edgeFilter eq noEdgeFilter) || localEdgeFilter.isDefined) {
         val local = localKnnGraph(corpus, idCol, vecCol, k, kCents, nprobe,
-          trainRounds, trainSample,
+          trainRounds, trainSample, n,
           localEdgeFilter.getOrElse((_: Long, _: Long) => true))
-        // the graph stays a CHECKPOINT leaf like the distributed result:
-        // join-heavy consumers (triangles' wedge self-join, linkpred)
-        // reference the edges several times, and re-scanning a
-        // LocalTableScan per reference measured ~0.2-0.4 s of task time
-        // per task per scan — the checkpoint pays it once
-        if (local.isDefined) return local.get.localCheckpoint(true)
+        if (local.isDefined) return local.get
       }
       return graft.util.ShuffleBudget.withAdvised(corpus, embShuffleInflate) {
         knnGraphIvf(corpus, idCol, vecCol, k, kCents, nprobe,
@@ -1263,9 +1200,13 @@ object Similarity {
     * parity spec pins against the codegen'd `QuantizedDot`.
     *
     * Returns None (caller falls back to the distributed path) on
-    * anything outside the exact-replica assumptions: null ids/vectors,
-    * ragged dimensions, duplicate ids (the distributed `groupBy(id)`
-    * assignment would collapse those; fixtures never carry them). */
+    * anything outside the exact-replica assumptions: a corpus (`n`
+    * rows, already counted) past the trainer's sample or the `Bounded`
+    * budget, non-integral/null ids, null vectors, ragged dimensions,
+    * duplicate ids (the distributed `groupBy(id)` assignment would
+    * collapse those; fixtures never carry them). The graph is a
+    * CHECKPOINT leaf like the distributed result: triangles' wedge
+    * self-join and linkpred reference the edges several times. */
   private def localKnnGraph(
       corpus: DataFrame,
       idCol: String,
@@ -1275,23 +1216,19 @@ object Similarity {
       nprobe: Int,
       trainRounds: Int,
       trainSample: Int,
+      n0: Long,
       pred: (Long, Long) => Boolean): Option[DataFrame] = {
     val spark = corpus.sparkSession
     val idType = corpus.schema(idCol).dataType
     val idHash = conv(substring(md5(col(idCol).cast("string").cast("binary")), 1, 15), 16, 10)
       .cast("long")
-    val qvE = transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long"))
-    val collected = corpus
-      .select(col(idCol).cast("long").as("sid"), qvE.as("qv"), idHash.as("__h"))
-      .orderBy(asc("__h"), asc("sid"))
-      .collect()
+    val collected = Bounded.collect(corpus
+      .select(col(idCol).as("sid"), qvT(col(vecCol)).as("qv"), idHash.as("__h"))
+      .orderBy(asc("__h"), asc("sid")),
+      cap = trainSample, unique = Seq("sid"), counted = n0).getOrElse(return None)
     val n = collected.length
-    if (collected.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
     val ids = collected.map(_.getLong(0))
     val vecs = collected.map(_.getSeq[Long](1).toArray)
-    val dim = if (n == 0) 0 else vecs(0).length
-    if (vecs.exists(_.length != dim)) return None
-    if (ids.distinct.length != n) return None
 
     // train: sample and seeds are prefixes of the same hash order
     var cents: Array[(Long, Array[Long])] =
@@ -1391,18 +1328,7 @@ object Similarity {
       }.foreach(_.join())
       chunks.foreach(chunk => chunk.foreach(all.add))
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("probe_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(idCol,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("qdot",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("rn",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    Some(spark.createDataFrame(all, schema)
-      .select(col("probe_id").cast(idType).as("probe_id"),
-        col(idCol).cast(idType).as(idCol), col("qdot"), col("rn")))
+    Some(Bounded.leaf(spark, all, topKCols(idCol, idType)).localCheckpoint(true))
   }
 
   /** Margin-based parallel-pair (bitext) mining — the selection rule
@@ -1518,7 +1444,7 @@ object Similarity {
   /** ANN recall evaluation as a first-class relation — the quality
     * gauge a deployment runs BEFORE trusting an approximate index:
     * per probe, how many of the exact top-k the IVF path returned
-    * (recall@k in integer permille). `AuditRecall` measures this
+    * (recall@k in integer permille). SURVEY.md §9 records this number
     * offline across regimes; this operator makes the same number a
     * queryable, externally-replayable relation over the production
     * corpus, so an ingest pipeline can gate an index rollout on it
@@ -1635,7 +1561,7 @@ object Similarity {
       // independent, so the Σm² scan chunk-parallelizes by list.
       localSemDedupKeep(corpus, idCol, vecCol, minQdot, numCentroids,
         trainRounds, trainSample) match {
-        case Some(df) => return df.localCheckpoint(true)
+        case Some(df) => return df
         case None =>
       }
       return graft.util.ShuffleBudget.withAdvised(corpus, embShuffleInflate) {
@@ -1664,8 +1590,10 @@ object Similarity {
   /** Driver-local exact replica of [[semDedupKeep]] for a corpus within
     * the trainer's bounded-collect contract — see the eager branch
     * there for the replica argument. Returns None (distributed
-    * fallback) on null ids/vectors, duplicate ids, ragged dimensions,
-    * or a corpus past min(trainer take, `SPARK_GRAFT_KNN_LOCAL_MAX`). */
+    * fallback) on non-integral/null ids, null vectors, duplicate ids,
+    * ragged dimensions, or a corpus past the trainer take or the
+    * `Bounded` budget. The kept rows are a checkpoint leaf, like the
+    * distributed result. */
   private def localSemDedupKeep(
       corpus: DataFrame,
       idCol: String,
@@ -1674,34 +1602,18 @@ object Similarity {
       numCentroids: Int,
       trainRounds: Int,
       trainSample: Int): Option[DataFrame] = {
-    if (knnLocalMax <= 0) return None
     val idType = corpus.schema(idCol).dataType
-    if (!Seq[org.apache.spark.sql.types.DataType](
-        org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(idType)) return None
-    val spark = corpus.sparkSession
+    if (!Bounded.enabled || !Bounded.integral(idType)) return None
     val take = math.max(numCentroids, trainSample)
-    val raw = trainerSampleRaw(corpus, idCol, vecCol, take + 1)
+    val raw = Bounded.admit(trainerSampleRaw(corpus, idCol, vecCol, take + 1),
+      cap = take, unique = Seq("sid")).getOrElse(return None)
     val n = raw.length
-    if (n > math.min(take.toLong, knnLocalMax)) return None
-    if (raw.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
     val rows = raw.map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    val dim = if (n == 0) 0 else rows(0)._2.length
-    if (rows.exists(_._2.length != dim)) return None
-    if (rows.iterator.map(_._1).toSet.size != n) return None
 
     val cents = localCoarseTrain(rows, numCentroids, trainRounds, trainSample)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(idCol,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("list_id",
-        org.apache.spark.sql.types.LongType, nullable = false)))
     def finish(rows: java.util.List[org.apache.spark.sql.Row]): Option[DataFrame] =
-      Some(spark.createDataFrame(rows, schema)
-        .select(col(idCol).cast(idType).as(idCol),
-          col("list_id").cast(idType).as("list_id")))
+      Some(Bounded.leaf(corpus.sparkSession, rows,
+        Seq(idCol -> idType, "list_id" -> idType)).localCheckpoint(true))
     if (n == 0 || cents.isEmpty)
       return finish(java.util.Collections.emptyList[org.apache.spark.sql.Row])
 
@@ -1824,7 +1736,7 @@ object Similarity {
       codebook: Int,
       trainSample: Int,
       scope: graft.util.CacheScope): DataFrame = {
-    requireIntegralId(qdf, idCol, "pqCodebookFromQ")
+    Bounded.requireIntegralId(qdf, idCol, "pqCodebookFromQ")
     // Driver-local Lloyd round over the bounded sample — the
     // ivfCentroids rationale verbatim (see there): one distributed
     // TakeOrdered collect replaces a broadcast + two shuffle rounds +
@@ -2007,7 +1919,7 @@ object Similarity {
       trainSample: Int = defaultTrainSample,
       scope: graft.util.CacheScope = new graft.util.CacheScope): AnnIndex = {
     require(dim % numSub == 0, s"dim $dim not divisible into $numSub subspaces")
-    requireIntegralId(corpus, idCol, "annIndex")
+    Bounded.requireIntegralId(corpus, idCol, "annIndex")
     val spark = corpus.sparkSession
     val idType = corpus.schema(idCol).dataType
     val subDim = dim / numSub
@@ -2023,9 +1935,9 @@ object Similarity {
     // distributed corpus passes) run as exact local twins over the
     // same rows: argmax of 2·dot−|c|² with smallest-cent_id ties
     // (= ivfAssign's max_by) and per-subspace argmin of ‖sv−cv‖² with
-    // smallest-code ties (= pqCodes' min_by). A corpus past the bound
-    // (or with null/duplicate/ragged rows) takes the distributed
-    // passes below, unchanged.
+    // smallest-code ties (= pqCodes' min_by). A corpus past the trainer
+    // take or the `Bounded` budget (or with null/duplicate/ragged rows)
+    // takes the distributed passes below, unchanged.
     val take = math.max(numCentroids, trainSample)
     val raw = trainerSampleRaw(corpus, idCol, vecCol, take + 1)
     val rowsAll = raw.map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
@@ -2036,11 +1948,7 @@ object Similarity {
       trainRows.map(_._2).take(trainSample), numSub, subDim, codebook)
     val book = bookDF(spark, bookArr, numSub)
     val n = rowsAll.length
-    val localOk = knnLocalMax > 0 && n <= math.min(take.toLong, knnLocalMax) &&
-      !raw.exists(r => r.isNullAt(0) || r.isNullAt(1)) &&
-      rowsAll.forall(_._2.length == dim) &&
-      rowsAll.iterator.map(_._1).toSet.size == n
-    if (localOk) {
+    if (Bounded.admit(raw, cap = take, unique = Seq("sid"), width = dim).isDefined) {
       val cnorm = cents.map(c => localDot(c._2, c._2))
       val listRows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
       val codeRows = new java.util.ArrayList[org.apache.spark.sql.Row](n * numSub)
@@ -2078,29 +1986,14 @@ object Similarity {
           sub += 1
         }
       }
-      val lt = org.apache.spark.sql.types.LongType
-      val listsSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__sid", lt, nullable = false),
-        org.apache.spark.sql.types.StructField("__list", lt, nullable = false)))
-      val codesSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__sid", lt, nullable = false),
-        org.apache.spark.sql.types.StructField("sub", lt, nullable = false),
-        org.apache.spark.sql.types.StructField("code", lt, nullable = false)))
-      // coalesce(1): LocalRelations otherwise parallelize to the
-      // session default (32 slices), and writeAnnIndex would pay 32
-      // parquet-writer inits per relation AND leave a 32-part-file
-      // layout every downstream read reopens (guide §6 small files;
-      // measured 3-5 s of task time PER WRITE at sf0.1 against the
-      // distributed plans' AQE-coalesced single files)
+      // written leaves (writeAnnIndex; 3-5 s of task time PER WRITE at
+      // sf0.1 for a session-default-sliced LocalRelation)
       return AnnIndex(
         coarse,
-        spark.createDataFrame(listRows, listsSchema)
-          .select(col("__sid").cast(idType).as(idCol),
-            col("__list").cast(idType).as("list_id"))
+        Bounded.leaf(spark, listRows, Seq(idCol -> idType, "list_id" -> idType))
           .coalesce(1),
         book,
-        spark.createDataFrame(codeRows, codesSchema)
-          .select(col("__sid").cast(idType).as(idCol), col("sub"), col("code"))
+        Bounded.leaf(spark, codeRows, Seq(idCol -> idType, "sub" -> longT, "code" -> longT))
           .coalesce(1))
     }
     // the corpus-wide passes (assignment, encode) stay distributed
@@ -2279,10 +2172,9 @@ object Similarity {
   }
 
   /** Driver-local exact replica of [[probeIndex]]'s serve leg for a
-    * BOUNDED index (≤ `SPARK_GRAFT_KNN_LOCAL_MAX` indexed vectors — the
-    * same knob and bound discipline as the kNN-graph fast path): the
-    * four index relations and the probe batch are collected through
-    * bounded limits (five independent jobs, overlapped per guide §2.6),
+    * BOUNDED index (the four index relations and the probe batch share
+    * the `Bounded` budget): all five are collected through bounded
+    * limits (five independent jobs, overlapped per guide §2.6),
     * routing / ADC / shortlist run locally in exact int64, and ONE more
     * distributed pass fetches raw vectors for just the ≤ probes·refine
     * shortlist ids (so the fast path never assumes the CORPUS is small
@@ -2308,82 +2200,41 @@ object Similarity {
       numSub: Int,
       subDim: Int,
       refine: Int): Option[DataFrame] = {
-    val bound = knnLocalMax
-    if (bound <= 0) return None
     val idType = corpus.schema(idCol).dataType
-    if (!Seq[org.apache.spark.sql.types.DataType](
-        org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(idType)) return None
     val spark = corpus.sparkSession
-    val lim = math.min(bound, (Int.MaxValue - 8).toLong).toInt
-    val codesLim = math.min(numSub.toLong * lim + 1, (Int.MaxValue - 8).toLong).toInt
-    import org.apache.spark.sql.Row
-    // five bounded independent collects — overlap them (guide §2.6)
-    var listsRaw: Array[Row] = null
-    var codesRaw: Array[Row] = null
-    var coarseRaw: Array[Row] = null
-    var bookRaw: Array[Row] = null
-    var probesRaw: Array[Row] = null
-    graft.util.Par.jobs(Seq(
-      () => listsRaw = index.lists
-        .select(col(idCol).cast("long"), col("list_id").cast("long"))
-        .limit(lim + 1).collect(),
-      () => codesRaw = index.codes
-        .select(col(idCol).cast("long"), col("sub").cast("long"), col("code").cast("long"))
-        .limit(codesLim + 1).collect(),
-      () => coarseRaw = index.coarse
-        .select(col("cent_id").cast("long"), col("cv"), col("nrm").cast("long"))
-        .limit(lim + 1).collect(),
-      () => bookRaw = index.book
-        .select(col("sub").cast("long"), col("code").cast("long"), col("cv"))
-        .limit(codesLim + 1).collect(),
-      () => probesRaw = corpus.where(probeFilter)
-        .select(col(idCol).cast("long"),
-          transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long")))
-        .limit(lim + 1).collect()))
-    if (listsRaw.length > lim || probesRaw.length > lim ||
-        codesRaw.length > codesLim || coarseRaw.length > lim ||
-        bookRaw.length > codesLim) return None
-    if (listsRaw.exists(r => r.isNullAt(0) || r.isNullAt(1)) ||
-        codesRaw.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) ||
-        coarseRaw.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) ||
-        bookRaw.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) ||
-        probesRaw.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val probes = probesRaw.map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    if (probes.iterator.map(_._1).toSet.size != probes.length) return None
-    val lists = listsRaw.map(r => (r.getLong(0), r.getLong(1)))
-    if (lists.iterator.map(_._1).toSet.size != lists.length) return None
-    val coarse = coarseRaw.map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
-    val book = bookRaw.map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toArray))
-    // dimension discipline: every probe/centroid vector spans exactly
-    // numSub·subDim coordinates and every book cell spans subDim —
-    // anything ragged is outside the replica's slice arithmetic
     val dim = numSub * subDim
-    if (probes.exists(_._2.length != dim) ||
-        coarse.exists(_._2.length != dim) ||
-        book.exists(_._3.length != subDim)) return None
-    // duplicate cent_ids would double-visit a list (the distributed
+    import org.apache.spark.sql.Row
+    // five bounded independent collects — overlap them (guide §2.6).
+    // Dimension discipline: every probe/centroid vector spans exactly
+    // numSub·subDim coordinates and every book cell spans subDim —
+    // anything ragged is outside the replica's slice arithmetic.
+    // Duplicate cent_ids would double-visit a list (the distributed
     // plan sums the doubled join rows); duplicate (sub, code) cells
     // would sum per cell — neither occurs from clean training, both
     // bail to the distributed serve
-    if (coarse.iterator.map(_._1).toSet.size != coarse.length) return None
-    if (book.iterator.map(b => (b._1, b._2)).toSet.size != book.length) return None
+    var listsRaw, codesRaw, coarseRaw, bookRaw, probesRaw: Option[Array[Row]] = None
+    graft.util.Par.jobs(Seq(
+      () => listsRaw = Bounded.collect(index.lists.select(col(idCol), col("list_id")),
+        share = 5, unique = Seq(idCol)),
+      () => codesRaw = Bounded.collect(index.codes.select(col(idCol), col("sub"), col("code")),
+        share = 5),
+      () => coarseRaw = Bounded.collect(index.coarse.select(col("cent_id"), col("cv"), col("nrm")),
+        share = 5, unique = Seq("cent_id"), width = dim),
+      () => bookRaw = Bounded.collect(index.book.select(col("sub"), col("code"), col("cv")),
+        share = 5, unique = Seq("sub", "code"), width = subDim),
+      () => probesRaw = Bounded.collect(corpus.where(probeFilter)
+        .select(col(idCol), qvT(col(vecCol)).as("qv")),
+        share = 5, unique = Seq(idCol), width = dim)))
+    val probes = probesRaw.getOrElse(return None).map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+    val lists = listsRaw.getOrElse(return None).map(r => (r.getLong(0), r.getLong(1)))
+    val coarse = coarseRaw.getOrElse(return None)
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
+    val book = bookRaw.getOrElse(return None)
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toArray))
+    val codes = codesRaw.getOrElse(return None)
 
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("probe_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(idCol,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("qdot",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("rn",
-        org.apache.spark.sql.types.LongType, nullable = false)))
     def finish(rows: java.util.List[Row]): Option[DataFrame] =
-      Some(spark.createDataFrame(rows, outSchema)
-        .select(col("probe_id").cast(idType).as("probe_id"),
-          col(idCol).cast(idType).as(idCol), col("qdot"), col("rn")))
+      Some(Bounded.leaf(spark, rows, topKCols(idCol, idType)))
     if (probes.isEmpty || coarse.isEmpty)
       return finish(java.util.Collections.emptyList[Row])
 
@@ -2394,7 +2245,7 @@ object Similarity {
     }
     // PQ codes per id
     val codesOf = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[(Long, Long)]]
-    codesRaw.foreach { r =>
+    codes.foreach { r =>
       codesOf.getOrElseUpdate(r.getLong(0),
         new scala.collection.mutable.ArrayBuffer[(Long, Long)]) += ((r.getLong(1), r.getLong(2)))
     }
@@ -2439,20 +2290,12 @@ object Similarity {
     if (shortIds.isEmpty) return finish(java.util.Collections.emptyList[Row])
     // ONE distributed pass fetches raw vectors for just the shortlist —
     // the corpus itself is never assumed bounded
-    val fetched = corpus
-      .select(col(idCol).cast("long").as("__sid"),
-        transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long")).as("__qv"))
+    val fetched = Bounded.admit(corpus
+      .select(col(idCol).cast("long").as("__sid"), qvT(col(vecCol)).as("__qv"))
       .where(col("__sid").isin(shortIds.toSeq: _*))
-      .collect()
-    if (fetched.exists(r => r.isNullAt(1))) return None
+      .collect(), unique = Seq("__sid"), width = dim).getOrElse(return None)
     val vecOf = new scala.collection.mutable.LongMap[Array[Long]]
-    fetched.foreach { r =>
-      val sid = r.getLong(0)
-      if (vecOf.contains(sid)) return None // duplicate corpus ids: bail
-      val v = r.getSeq[Long](1).toArray
-      if (v.length != dim) return None // ragged corpus vector: bail
-      vecOf(sid) = v
-    }
+    fetched.foreach(r => vecOf(r.getLong(0)) = r.getSeq[Long](1).toArray)
     val out = new java.util.ArrayList[Row]
     shortlists.foreach { case (pid, pq, short) =>
       val scored = short.flatMap(cid => vecOf.get(cid).map(v => (localDot(pq, v), cid)))
@@ -2770,48 +2613,26 @@ object Similarity {
       refine: Int,
       trainRounds: Int,
       trainSample: Int): Option[DataFrame] = {
-    if (knnLocalMax <= 0) return None
+    if (!Bounded.enabled) return None
     val idType = corpus.schema(idCol).dataType
-    if (!Seq[org.apache.spark.sql.types.DataType](
-        org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(idType)) return None
     val spark = corpus.sparkSession
     val subDim = dim / numSub
     val take = math.max(numCentroids, trainSample)
-    val lim = math.min(knnLocalMax, (Int.MaxValue - 8).toLong).toInt
 
     // two bounded independent collects — overlap them (guide §2.6)
     var raw: Array[org.apache.spark.sql.Row] = null
-    var probeRaw: Array[org.apache.spark.sql.Row] = null
+    var probeRaw: Option[Array[org.apache.spark.sql.Row]] = None
     graft.util.Par.jobs(Seq(
       () => raw = trainerSampleRaw(corpus, idCol, vecCol, take + 1),
-      () => probeRaw = corpus.where(probeFilter)
-        .select(col(idCol).cast("long")).limit(lim + 1).collect()))
-    val n = raw.length
-    if (n > math.min(take.toLong, knnLocalMax) || probeRaw.length > lim) return None
-    if (raw.exists(r => r.isNullAt(0) || r.isNullAt(1)) ||
-        probeRaw.exists(_.isNullAt(0))) return None
-    val rows = raw.map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    if (rows.exists(_._2.length != dim)) return None
-    if (rows.iterator.map(_._1).toSet.size != n) return None
-    val probeIds = probeRaw.map(_.getLong(0))
-    if (probeIds.toSet.size != probeIds.length) return None
+      () => probeRaw = Bounded.collect(corpus.where(probeFilter).select(col(idCol)),
+        share = 2, unique = Seq(idCol))))
+    val probeIds = probeRaw.getOrElse(return None).map(_.getLong(0))
+    val rows = Bounded.admit(raw, share = 2, cap = take, unique = Seq("sid"), width = dim)
+      .getOrElse(return None).map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
+    val n = rows.length
 
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("probe_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(idCol,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("qdot",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("rn",
-        org.apache.spark.sql.types.LongType, nullable = false)))
     def finish(rs: java.util.List[org.apache.spark.sql.Row]): Option[DataFrame] =
-      Some(spark.createDataFrame(rs, outSchema)
-        .select(col("probe_id").cast(idType).as("probe_id"),
-          col(idCol).cast(idType).as(idCol), col("qdot"), col("rn")))
+      Some(Bounded.leaf(spark, rs, topKCols(idCol, idType)))
 
     val cents = localCoarseTrain(rows, numCentroids, trainRounds, trainSample)
     if (n == 0 || cents.isEmpty || probeIds.isEmpty)

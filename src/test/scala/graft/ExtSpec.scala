@@ -55,7 +55,7 @@ class ExtSpec extends SparkSpec {
 
   test("driver-local union-find CC == distributed min-label loop") {
     // the r14 fast path folds small pair graphs on the driver; pin it
-    // against the distributed loop (graft.cc.local.max=0 disables the
+    // against the distributed loop (graft.local.max=0 disables the
     // fast path) on a graph with a long chain (multi-round diameter),
     // an isolated pair, a cycle, and a self-loop
     val pairs = (((1L to 7L).map(i => (i, i + 1)) :+ (100L, 101L)) ++
@@ -63,17 +63,11 @@ class ExtSpec extends SparkSpec {
       .toDF("id_a", "id_b")
     val fast = Dedup.connectedComponents(pairs, "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
-    val key = "graft.cc.local.max"
-    val before = sys.props.get(key)
-    sys.props(key) = "0"
-    try {
+    LocalRoute.off {
       val loop = Dedup.connectedComponents(pairs, "id_a", "id_b")
         .as[(Long, Long)].collect().toMap
       assert(fast == loop, "union-find fast path diverges from the loop")
       assert(fast(204L) == 200L && fast(300L) == 300L && fast(8L) == 1L)
-    } finally before match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
     }
   }
 
@@ -556,16 +550,9 @@ class ExtSpec extends SparkSpec {
     // index runs): the r14 bounded driver-local serve replaces the
     // whole plan with a LocalTableScan, so disable it for this test
     // (KnnLocalSpec pins the two paths row-identical)
-    val key = "graft.knn.local.max"
-    val before = sys.props.get(key)
-    sys.props(key) = "0"
-    val plan = try Similarity.ivfPqTopK(emb, "vec_id", "embedding",
+    val plan = LocalRoute.off(Similarity.ivfPqTopK(emb, "vec_id", "embedding",
         probeFilter = col("vec_id") < 5, k = 5, numCentroids = 8)
-      .queryExecution.executedPlan.toString
-    finally before match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
+      .queryExecution.executedPlan.toString)
     // the ADC shortlist and the final ranking both run through the
     // bounded-heap operator — never a full window sort over candidates
     assert(plan.contains("TopKPerKey"), plan.take(2000))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ext.Similarity
 
 /** Pins the r14 driver-local kNN-graph fast path against the
-  * distributed derivation (`graft.knn.local.max=0` disables it): the
+  * distributed derivation (`graft.local.max=0` disables it): the
   * graph must be IDENTICAL on a fixture that exercises the semantic
   * corners — qdot ties (id-broken), many near-empty inverted lists
   * (centroid budget > occupied lists), k larger than a probe's
@@ -28,20 +28,9 @@ class KnnLocalSpec extends SparkSpec {
   private def rowsOf(df: DataFrame): Seq[String] =
     df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
 
-  private def withLoopOnly[A](body: => A): A = {
-    val key = "graft.knn.local.max"
-    val before = sys.props.get(key)
-    sys.props(key) = "0"
-    try body
-    finally before match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
-  }
-
   private def parity(name: String)(run: () => DataFrame): Unit = {
     val fast = rowsOf(run())
-    val loop = withLoopOnly(rowsOf(run()))
+    val loop = LocalRoute.off(rowsOf(run()))
     assert(fast == loop, s"$name: driver-local fast path diverges from the distributed graph")
     assert(fast.nonEmpty, s"$name: empty result — the parity check is vacuous")
   }
@@ -97,7 +86,7 @@ class KnnLocalSpec extends SparkSpec {
       probeFilter = col("vec_id") < 0, k = 3, numCentroids = 8,
       nprobe = 4, dim = 4, numSub = 2, codebook = 4, refine = 8)
     val fast = run()
-    val loop = withLoopOnly(run())
+    val loop = LocalRoute.off(run())
     assert(fast.collect().isEmpty && loop.collect().isEmpty)
     // names + types must match (nullability legitimately differs:
     // LocalRelation columns are provably non-null)
@@ -135,17 +124,6 @@ class KnnLocalSpec extends SparkSpec {
       Similarity.semDedupKeep(dup, "vec_id", "embedding", minQdot = 2000000L))
   }
 
-  private def withMmrLoopOnly[A](body: => A): A = {
-    val key = "graft.mmr.local.max"
-    val before = sys.props.get(key)
-    sys.props(key) = "0"
-    try body
-    finally before match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
-  }
-
   test("mmrRerank: driver-local == distributed (ties, missing vector, k > pool)") {
     // two probes; vec 42 tops probe 0's shortlist by qdot but has NO
     // vector row — the distributed inner pen join can only ever pick
@@ -163,7 +141,7 @@ class KnnLocalSpec extends SparkSpec {
     def run() = Similarity.mmrRerank(shortlist, vecs, "vec_id", "embedding",
       k = 4, lambdaPermille = 700)
     val fast = rowsOf(run())
-    val loop = withMmrLoopOnly(rowsOf(run()))
+    val loop = LocalRoute.off(rowsOf(run()))
     assert(fast == loop, "mmrRerank: driver-local fast path diverges from the loop")
     assert(fast.nonEmpty, "mmrRerank: empty result — the parity check is vacuous")
     // round 1 must have picked the vector-less top hit for probe 0
